@@ -374,19 +374,21 @@ def _run_stream_to_table(out: DataFrame, mode: str, prefix: str) -> DataFrame:
     spark = out.sparkSession
     state_parts = os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS")
     prev_parts = None
-    if state_parts:
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", state_parts)
-    q = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(mode)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
+    # one try around set, start and run: a start that fails (analysis
+    # error, bad checkpoint) must not leak the override into the session
     try:
-        q.awaitTermination()
+        if state_parts:
+            prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
+            spark.conf.set("spark.sql.shuffle.partitions", state_parts)
+        (
+            out.writeStream.format("memory")
+            .queryName(name)
+            .outputMode(mode)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination()
+        )
     finally:
         if prev_parts is not None:
             spark.conf.set("spark.sql.shuffle.partitions", prev_parts)

@@ -202,10 +202,19 @@ def _range_join_disjoint(
 
     if "__band_idx__" in left.columns or "__band_idx__" in right.columns:
         return None
+    spark = right.sparkSession
+    # Row lookups by name are case-sensitive while the analyzer is not (by
+    # default): resolve the edge columns to positions the way the join
+    # condition would, so ``lo_col="lo"`` against a dim column ``LO``
+    # takes the rewrite instead of raising
+    lo_i = _field_position(spark, right.columns, lo_col)
+    hi_i = _field_position(spark, right.columns, hi_col)
+    if lo_i is None or hi_i is None:
+        return None  # absent or ambiguous — the nested loop resolves or raises
     rows = right.limit(max_bands + 1).collect()
     if len(rows) > max_bands:
         return None  # dim too big for a literal chain — nested loop
-    bands = [(r[lo_col], r[hi_col]) for r in rows]
+    bands = [(r[lo_i], r[hi_i]) for r in rows]
     for lo, hi in bands:
         if lo is None or hi is None:
             return None
@@ -232,7 +241,6 @@ def _range_join_disjoint(
     # schema, zero re-execution of the right plan; ONE slice so the
     # broadcast build is one task (plain createDataFrame would slice the
     # local rows defaultParallelism ways again)
-    spark = right.sparkSession
     local = spark.createDataFrame(
         spark.sparkContext.parallelize(rows, 1), right.schema
     )
@@ -242,6 +250,15 @@ def _range_join_disjoint(
     return lb.join(F.broadcast(rb), on="__band_idx__", how="inner").drop(
         "__band_idx__"
     )
+
+
+def _field_position(spark, columns, name):
+    """Index of top-level column ``name`` in ``columns`` under the session's
+    ``spark.sql.caseSensitive``; ``None`` when absent or ambiguous."""
+    exact = spark.conf.get("spark.sql.caseSensitive", "false").lower() == "true"
+    fold = (lambda c: c) if exact else str.lower
+    hits = [i for i, c in enumerate(columns) if fold(c) == fold(name)]
+    return hits[0] if len(hits) == 1 else None
 
 
 def _floor_div(col, width):

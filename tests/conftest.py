@@ -5,6 +5,7 @@ from __future__ import annotations
 import math
 import os
 import sys
+import warnings
 
 import duckdb
 import pytest
@@ -221,8 +222,22 @@ SLOW_TESTS = {
 }
 
 
+@pytest.hookimpl(tryfirst=True)  # before -k/-m deselection sees the items
 def pytest_collection_modifyitems(config, items):
+    seen = set()
     for item in items:
         nodeid = item.nodeid.replace("tests/", "", 1)
+        seen.add(nodeid)
         if nodeid in SLOW_TESTS:
             item.add_marker(pytest.mark.slow)
+    # a renamed or deleted test leaves a SLOW_TESTS entry that matches
+    # nothing; report it, but only for files collected whole (a node-id
+    # run of one test collects just that test of its file)
+    whole = {n.split("::")[0] for n in seen} - {
+        os.path.basename(a.split("::")[0]) for a in config.args if "::" in a
+    }
+    for entry in sorted(SLOW_TESTS - seen):
+        if entry.split("::")[0] in whole:
+            warnings.warn(
+                pytest.PytestWarning(f"SLOW_TESTS entry matches no test: {entry}")
+            )

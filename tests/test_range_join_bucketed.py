@@ -262,3 +262,32 @@ def test_rewrite_band_cap_falls_back(spark):
     plan = formatted_plan(got)
     assert "BroadcastNestedLoopJoin" in plan
     assert _rows(got) == _rows(_bnlj(left, right, "v", "lo", "hi"))
+
+
+def test_mixed_case_band_columns_take_rewrite(spark, disjoint_sides):
+    # the analyzer matches "lo" to a dim column "LO"; the rewrite's
+    # driver-side band analysis must resolve it the same way
+    left, right = disjoint_sides
+    upper = right.toDF("BAND", "LO", "HI")
+    got = range_join(left, upper, "v", "lo", "hi")
+    assert "BroadcastHashJoin" in formatted_plan(got)
+    assert _rows(got) == _rows(_bnlj(left, upper, "v", "lo", "hi"))
+    assert len(_rows(got)) > 0
+
+
+def test_case_sensitive_session_resolves_exact_names(spark, disjoint_sides):
+    # with caseSensitive on, "lo"/"hi" name the disjoint bands and
+    # "LO"/"HI" overlapping ones; each call must use the exact columns
+    left, right = disjoint_sides
+    prev = spark.conf.get("spark.sql.caseSensitive")
+    spark.conf.set("spark.sql.caseSensitive", "true")
+    try:
+        both = right.withColumn("LO", F.col("lo") - 5).withColumn(
+            "HI", F.col("hi") + 5
+        )
+        assert both.columns == ["band", "lo", "hi", "LO", "HI"]
+        for lo, hi in (("lo", "hi"), ("LO", "HI")):
+            got = range_join(left, both, "v", lo, hi)
+            assert _rows(got) == _rows(_bnlj(left, both, "v", lo, hi))
+    finally:
+        spark.conf.set("spark.sql.caseSensitive", prev)

@@ -239,6 +239,25 @@ def test_available_now_drains_and_stops(spark, tmp_path):
     assert rows(got.join(batch, on=list(got.columns), how="left_anti")) == []
 
 
+def test_failed_stream_start_restores_shuffle_partitions(spark, monkeypatch):
+    # a streaming aggregate without a watermark cannot run in append mode:
+    # .start() itself raises, after the state-partition override was set
+    from pyspark.errors import AnalysisException
+
+    from pyarrow_ops_spark.entry_queries.streaming_sources import (
+        _run_stream_to_table,
+    )
+
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "3")
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    assert before != "3"
+    agg = spark.readStream.format("rate").load().groupBy("value").count()
+    with pytest.raises(AnalysisException):
+        _run_stream_to_table(agg, "append", "failed_start")
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+    assert not [q for q in spark.streams.active if q.name.startswith("failed_start")]
+
+
 def test_stream_upsert_sink_applies_cdc_batches(spark, tmp_path):
     # three CDC files: seed, then update+insert, then delete — streamed
     # file-by-file; the final snapshot must equal the sequential merge
